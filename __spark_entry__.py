@@ -5805,79 +5805,31 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
 
 
 #: The driver's correctness gate checks EXACTLY these 50, in order
-#: (round-11 rotation — see the rotation policy in queries()).
+#: (see the rotation policy in queries()).
 _FIRST50 = [
-    # ---- ROUND-12 GATE ----
-    # the FULL r6-stale block (oldest gate evidence — every remaining
-    # query whose latest driver-green row is round 6), alphabetical:
-    # 40 names, machine-checked by the rotation contract
-    # (tests/test_gate_rotation.py::test_rotation_report_live_history)
-    "accessors2_literal", "audio_frames", "batch_sessions",
-    "bloom_new_docs", "bpe_merges", "buildarea_literal",
-    "count_min_topk", "dedup_keep_one", "edit_utils_literal",
-    "embed_quantize", "geom_edit_points", "geometric_median",
-    "graph_stats", "hilbert_keys", "hll_registers",
-    "line_edit_literal", "line_merge_literal", "longest_line_literal",
-    "map_match", "mic_snap_literal", "offset_clip_literal",
-    "pack_sequences", "pagerank_neardup", "quality_filter",
-    "random_projection", "relate_literal", "session_window_agg",
-    "setops_literal", "shortline_project", "smoothing_literal",
-    "sphere_nav", "sphere_paths", "streaming_enrich",
-    "streaming_geofence", "streaming_hexbin", "streaming_hll",
-    "streaming_map_match", "subdivide_boxes", "tile_normalize_literal",
-    "unigram_logprob",
+    # ---- ROUND-13 GATE ----
+    # Policy: changed kernels first, then the oldest block, the two
+    # canaries, then the next-oldest block; nothing else takes a slot.
+    # kernels changed after the r12 gate was pinned (no r12 row yet)
+    "streaming_join", "ann_recall", "hamming_recall", "pq_topk",
+    "ivfpq_topk", "spatial_knn_join", "knn_join", "cluster_within",
+    "neardup_components",
+    # the full r6-stale block (oldest gate evidence, rotation_report())
+    "url_dedup", "validity_literal", "value_quantiles",
+    "vocab_encode", "zonal_stats",
     # heavy regression canaries (every round)
     "grid_spatial_join", "minhash_pairs",
-    # re-gates for kernels CHANGED by this optimization round
-    # (jaccard prefix persist + accumulated-overlap filter; rollup
-    # changelog compaction plumbing; edit_join cache release; CC /
-    # streaming / PQ items as they land) — the changed-kernel slot of
-    # the rotation policy
-    "jaccard_prefix", "dup_spans", "hourly_rollup", "streaming_rollup",
-    "edit_join", "fuzzy_title_dedup", "dbscan_clusters", "pq_recall",
-    # (the r7 block — asof_forward, bm25_search, buffer_lines, ... —
-    # becomes the oldest evidence after this round and leads any
-    # future gate's pool. Two late-r11 operators register as queries
-    # in r12 — this round's gate is full: streaming_benford
-    # (streaming/drift.py, equality-pinned by tests/test_benford.py)
-    # Fellegi-Sunter linkage (operators/linkage.py,
-    # tests/test_linkage.py), per-key OLS trend (operators/
-    # timeseries.py trend_by_key), McNemar's paired test
-    # (operators/evals.py mcnemar_test), and degree-oriented exact
-    # triangle counting (operators/graph.py triangle_count — needs
-    # ALLOWED_BROADCAST_CROSSES = 3: the one-row vertex/edge/wedge
-    # summary frames crossed into the single output row, the
-    # hll_setops pattern; the others pre-audit clean), the
-    # declarative data-contract audit (operators/profile.py
-    # expectations_check), the deterministic Poisson-bootstrap
-    # mean CI (operators/evals.py bootstrap_mean_ci), per-key CUSUM
-    # changepoint detection (operators/timeseries.py
-    # cusum_changepoint), and the seasonal-index profile
-    # (operators/timeseries.py seasonal_profile — needs
-    # ALLOWED_BROADCAST_CROSSES = 1: the one-row totals frame
-    # crossed into the ≤period cells), and the chi-square
-    # independence audit (operators/profile.py chi2_independence +
-    # _stat — needs ALLOWED_BROADCAST_CROSSES = 2: the
-    # category-bounded marginal grid cross + the one-row grand
-    # total), phonetic (simplified-Soundex) linkage blocking
-    # (operators/linkage.py phonetic_code_col / phonetic_blocks),
-    # tie-aware Spearman rank correlation (operators/evals.py
-    # spearman_corr — needs ALLOWED_BROADCAST_CROSSES = 1: the
-    # one-row total crossed into the joint-histogram cells), and
-    # the histogram decision-stump fit (operators/mlfit.py
-    # stump_fit), Welch's t-test (operators/evals.py ttest_welch;
-    # Cramér's V rides on chi2_independence_stat), bounded-round
-    # k-core peeling (operators/graph.py kcore_peel), CUPED
-    # variance-reduced A/B (operators/evals.py cuped_ttest), the
-    # Kaplan-Meier survival estimator and its log-rank companion
-    # (operators/evals.py kaplan_meier, logrank_test — each needs
-    # ALLOWED_BROADCAST_CROSSES = 1: the one-row totals crossed
-    # into the distinct-time frame), per-group Wilson proportion
-    # intervals (operators/evals.py wilson_ci), OHLC bars
-    # (operators/timeseries.py ohlc_bars), and the
-    # streaming seasonal twin (streaming/drift.py
-    # streaming_seasonal, equality-pinned) — all unit-pinned, with
-    # oracle-grade previews in tests/test_r12_previews.py.)
+    # the alphabetically-first 34 of the r7 block (next-oldest evidence)
+    "alpha_resample", "asof_nearest", "auc_by_group", "auc_eval",
+    "bpe_encode", "calibration_bins", "chunk_udtf", "corpus_diff",
+    "csv_roundtrip", "domain_entropy", "dup_cluster_hist",
+    "events_pivot", "feature_corr", "hard_negatives", "heldout_ppl",
+    "hll_by_group", "hll_estimate", "hll_setops",
+    "join_size_estimate", "ks_drift", "lang_confusion",
+    "linreg_score", "linreg_weights", "logreg_weights", "mlm_masking",
+    "normalize_text", "orc_roundtrip", "pyds_roundtrip",
+    "pyds_write_roundtrip", "quantiles_by_type", "rolling_user_sum",
+    "scd2_history", "sentence_split", "setsrid_roundtrip",
 ]
 
 

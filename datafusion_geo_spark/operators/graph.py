@@ -203,116 +203,3 @@ def graph_stats(pairs: DataFrame, id_a: str = "id_a",
     e.unpersist()
     return out
 
-
-def triangle_count(pairs: DataFrame, id_a: str = "id_a",
-                   id_b: str = "id_b") -> DataFrame:
-    """Exact global triangle count of an undirected pair list — the
-    graph-health number (clustering tendency of a near-dup /
-    co-occurrence graph) and the classic MapReduce-era scale test.
-
-    Degree orientation, the textbook trick that makes it tractable:
-    orient every edge from its lower-(degree, id) endpoint to the
-    higher one — a total, deterministic order — and count wedges only
-    at each edge's SOURCE. Every vertex then fans out at most
-    O(sqrt(m)) oriented edges, so the wedge self-join is bounded even
-    on power-law graphs where the naive neighbor join explodes at the
-    hubs. Each triangle is counted exactly once (its unique lowest
-    corner in the order). Plan: degree aggregate → two joins to
-    attach (deg, id) keys → wedge self-join on the source → closing-
-    edge semi-join. All exact integers.
-
-    Returns ONE row: (n_vertices, n_edges, n_wedges, n_triangles).
-    Self-loops and duplicate pairs are dropped first."""
-    e = (pairs.select(F.col(id_a).alias("u"), F.col(id_b).alias("v"))
-         .where(F.col("u") != F.col("v"))
-         .select(F.least("u", "v").alias("u"),
-                 F.greatest("u", "v").alias("v"))
-         .distinct())
-    deg = (e.select(F.col("u").alias("x"))
-           .unionByName(e.select(F.col("v").alias("x")))
-           .groupBy("x").agg(F.count(F.lit(1)).cast("long")
-                             .alias("d")))
-    ek = (e.join(deg.select(F.col("x").alias("u"),
-                            F.col("d").alias("du")), "u")
-          .join(deg.select(F.col("x").alias("v"),
-                           F.col("d").alias("dv")), "v"))
-    ku = F.struct(F.col("du").alias("d"), F.col("u").alias("i"))
-    kv = F.struct(F.col("dv").alias("d"), F.col("v").alias("i"))
-    oriented = ek.select(
-        F.when(ku < kv, F.col("u")).otherwise(F.col("v")).alias("src"),
-        F.when(ku < kv, kv).otherwise(ku).alias("dstk"),
-        F.when(ku < kv, F.col("v")).otherwise(F.col("u")).alias("dst"))
-    a = oriented.select("src", F.col("dst").alias("w1"),
-                        F.col("dstk").alias("k1"))
-    b = oriented.select("src", F.col("dst").alias("w2"),
-                        F.col("dstk").alias("k2"))
-    # k1 < k2 dedups the unordered wedge ONCE per source; the output
-    # pair re-canonicalizes BY ID because the closing-edge list e is
-    # (least, greatest) by id — degree order and id order disagree in
-    # general (the star-plus-rim case)
-    wedges = (a.join(b, "src").where(F.col("k1") < F.col("k2"))
-              .select(F.least("w1", "w2").alias("u"),
-                      F.greatest("w1", "w2").alias("v")))
-    closed = wedges.join(e, ["u", "v"], "left_semi")
-    # left_semi drops wedge MULTIPLICITY only if duplicates existed —
-    # wedge rows are distinct by construction (distinct edges, one
-    # wedge per unordered pair at one source), so an inner count is
-    # identical; semi keeps the plan a probe, not a multiplier
-    n_tri = closed.agg(F.count(F.lit(1)).cast("long")
-                       .alias("n_triangles"))
-    n_w = wedges.agg(F.count(F.lit(1)).cast("long").alias("n_wedges"))
-    n_e = e.agg(F.count(F.lit(1)).cast("long").alias("n_edges"))
-    n_v = deg.agg(F.count(F.lit(1)).cast("long").alias("n_vertices"))
-    return (n_v.crossJoin(F.broadcast(n_e))
-            .crossJoin(F.broadcast(n_w))
-            .crossJoin(F.broadcast(n_tri)))
-
-
-def kcore_peel(pairs: DataFrame, k: int, rounds: int = 3,
-               id_a: str = "id_a", id_b: str = "id_b") -> DataFrame:
-    """Bounded-round k-core peeling of an undirected pair list — the
-    degeneracy screen for similarity graphs ("which documents sit in
-    a densely inter-duplicated cluster, not just touch one?"): each
-    round drops every vertex whose current degree is < k, together
-    with its edges, and keeps the rest.
-
-    Fixed ``rounds`` rather than a convergence test — the
-    pagerank_int philosophy: the result is a pure function of
-    (edge set, k, rounds) with NO driver-side per-round count
-    actions, and an oracle replays the identical unrolled chain.
-    The true k-core is the fixpoint; r rounds reach it whenever the
-    peel cascade is shorter than r (typical for similarity graphs —
-    re-run with more rounds when the output still moves; a vertex
-    set that survives one extra round unchanged IS the k-core).
-
-    Scale shape per round: one endpoint-melt degree aggregate + two
-    semi-joins of the edge list against the surviving vertex set —
-    the Pregel cost, same as one PageRank iteration. Self-loops and
-    duplicate pairs are dropped first.
-
-    Returns the surviving vertices: (id, deg) with deg the vertex's
-    degree in the peeled graph (NOT its original degree); empty when
-    everything peels."""
-    if k < 1 or rounds < 1:
-        raise ValueError("kcore_peel: k and rounds must be >= 1")
-    e = (pairs.select(F.col(id_a).alias("u"), F.col(id_b).alias("v"))
-         .where(F.col("u") != F.col("v"))
-         .select(F.least("u", "v").alias("u"),
-                 F.greatest("u", "v").alias("v"))
-         .distinct())
-
-    def degrees(edges):
-        return (edges.select(F.col("u").alias("x"))
-                .unionByName(edges.select(F.col("v").alias("x")))
-                .groupBy("x")
-                .agg(F.count(F.lit(1)).cast("long").alias("deg")))
-
-    for _ in range(rounds):
-        alive = degrees(e).where(F.col("deg") >= k).select("x")
-        e = (e.join(alive.withColumnRenamed("x", "u"), "u",
-                    "left_semi")
-             .join(alive.withColumnRenamed("x", "v"), "v",
-                   "left_semi"))
-    out = degrees(e).select(F.col("x").alias("id"), "deg")
-    # cut the rounds-deep unrolled lineage before handing back
-    return out.localCheckpoint(eager=True)

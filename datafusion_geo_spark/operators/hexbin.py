@@ -1,8 +1,7 @@
 """Hexagonal binning — the PostGIS ST_HexagonGrid / ST_Hexagon shape
 re-expressed Spark-first: cell ASSIGNMENT is pure JVM arithmetic
 (axial coordinates + cube rounding as built-in expressions — zero
-Python in the aggregation path, fully whole-stage-codegen'd), and only
-the optional hexagon POLYGON materialization goes through a kernel.
+Python in the aggregation path, fully whole-stage-codegen'd).
 
 Convention (documented; PostGIS's grid differs only by origin/
 orientation bookkeeping): POINTY-TOP hexagons of circumradius
@@ -19,8 +18,6 @@ profile as a GROUP BY on two ints.
 """
 
 from __future__ import annotations
-
-import math
 
 import pyspark.sql.functions as F
 from pyspark.sql import Column, DataFrame
@@ -65,25 +62,3 @@ def hexbin_counts(df: DataFrame, size: float, x_col: str = "x",
             .groupBy(F.col("_c.q").alias("q"), F.col("_c.r").alias("r"))
             .agg(F.count(F.lit(1)).alias("n")))
 
-
-def hexagon_wkt(q: int, r: int, size: float, ndigits: int = 6) -> str:
-    """The pointy-top hexagon polygon of axial cell (q, r) as WKT —
-    vertices at angles 30°+k·60° around the cell center, coordinates
-    rounded half-away-from-zero at ``ndigits`` (the repo-wide binary
-    rounding, so goldens are engine-portable strings)."""
-    cx = size * SQRT3 * (q + r / 2.0)
-    cy = size * 1.5 * r
-
-    def rnd(v: float) -> float:
-        scale = 10.0 ** ndigits
-        return math.copysign(math.floor(abs(v) * scale + 0.5), v) / scale + 0.0
-
-    pts = []
-    for k in range(6):
-        a = math.pi / 6.0 + k * math.pi / 3.0
-        pts.append((rnd(cx + size * math.cos(a)),
-                    rnd(cy + size * math.sin(a))))
-    pts.append(pts[0])
-    from ..geo.wkt import fmt_num
-    body = ",".join(f"{fmt_num(px)} {fmt_num(py)}" for px, py in pts)
-    return f"POLYGON(({body}))"

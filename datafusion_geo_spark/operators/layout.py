@@ -11,21 +11,20 @@ clustering applies, built here from plain Spark primitives.
 
 ``morton_key`` is pure JVM bit arithmetic (the classic spread-bits
 multiply-free interleave — 5 mask-shift steps per axis, whole-stage
-codegen friendly, no UDF). ``zorder_layout`` range-partitions by the
-key (Spark samples quantiles, so output files are balanced even for
-skewed data) and sorts within partitions.
+codegen friendly, no UDF). The write path that sorts by it is
+``sources/geoio.py``'s Z-ordered GeoParquet writer.
 """
 
 from __future__ import annotations
 
-from typing import Optional, Tuple
+from typing import Tuple
 
 import pyspark.sql.functions as F
 from pyspark.sql import Column, DataFrame
 
 from ..sources.geoio import _part1by1 as _spread16
 
-__all__ = ["morton_key", "zorder_layout"]
+__all__ = ["morton_key"]
 
 # The bit-spreading ladder is shared with sources/geoio.py, whose
 # cell-size-based morton_key serves the write_geo_parquet within-cell
@@ -60,24 +59,6 @@ def morton_key(x: Column, y: Column,
     # junk rows a real spatial key) — keep null-in/null-out explicit
     return F.when(x.isNull() | y.isNull(), F.lit(None).cast("long")) \
             .otherwise(z).alias("morton")
-
-
-def zorder_layout(df: DataFrame, x_col: str, y_col: str,
-                  bounds: Tuple[float, float, float, float],
-                  num_files: Optional[int] = None,
-                  bits: int = 16) -> DataFrame:
-    """Rows arranged in Z-order for writing: range-partitioned on the
-    Morton key (one shuffle; Spark's range partitioner samples the key
-    distribution, so skewed data still yields balanced files) and
-    sorted within partitions. Follow with ``.write.parquet(...)`` —
-    each file then covers a compact spatial cell and min-max stats
-    prune. The key column is dropped again: layout is a property of
-    row order, not schema."""
-    key = morton_key(F.col(x_col), F.col(y_col), bounds, bits)
-    with_key = df.withColumn("_zkey", key)
-    parted = (with_key.repartitionByRange(num_files, "_zkey")
-              if num_files else with_key.repartitionByRange("_zkey"))
-    return parted.sortWithinPartitions("_zkey").drop("_zkey")
 
 
 def hilbert_key(x: Column, y: Column,

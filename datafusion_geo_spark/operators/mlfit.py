@@ -301,82 +301,3 @@ def power_rounds(rows, iters: int, quant: int) -> list:
              for x in w]
     return [(i + 1, int(v[i])) for i in range(dim)]
 
-
-def stump_fit(df: DataFrame, feature_cols: Sequence[str],
-              label_col: str) -> DataFrame:
-    """Histogram-based decision-stump fit — the split-finding
-    primitive of every gradient-boosting trainer (XGBoost /
-    LightGBM's 'histogram algorithm'): for each integer-quantized
-    feature, the threshold t maximizing the SSE reduction of the
-    split x ≤ t, from per-bin label sums alone.
-
-    100-TB shape: ONE melt pass builds the (feature, bin) histogram
-    (k-fold expand, the table_profile cost model); cumulative
-    left-side sums are a window over each feature's DISTINCT-BIN
-    frame (bin-count-sized, partitioned by feature — never the
-    corpus); the winner per feature is a grouped max over a struct
-    with a deterministic tie order (best score, then SMALLEST
-    threshold). No driver loop, no per-candidate pass: the classic
-    trainer's "one data pass per tree level" here is one data pass
-    total.
-
-    Exactness: bin counts and label sums are exact int64; the split
-    score S_L²/n_L + S_R²/n_R and the reported gain
-    (score − S²/n, ≥ 0 always) are single fixed double expressions
-    of those ints — deterministic and replayable verbatim (the
-    chi2_independence discipline), with the gain 6-dp rounded once.
-
-    Returns one row per feature with ≥ 2 distinct bins: (feature,
-    threshold, n_left, sum_left, n_right, sum_right, gain); the
-    split is feature ≤ threshold. NULL labels / feature values are
-    excluded per-pair."""
-    from pyspark.sql import Window
-
-    from .evals import _r6
-
-    y = F.col(label_col).cast("long")
-    pairs = F.array(*[
-        F.struct(F.lit(c).alias("f"),
-                 F.col(c).cast("long").alias("v"))
-        for c in feature_cols])
-    m = (df.where(y.isNotNull())
-         .select(y.alias("_y"), F.explode(pairs).alias("_p"))
-         .select(F.col("_p.f").alias("feature"),
-                 F.col("_p.v").alias("v"), "_y")
-         .where(F.col("v").isNotNull()))
-    hist = (m.groupBy("feature", "v")
-            .agg(F.count(F.lit(1)).cast("long").alias("n"),
-                 F.sum("_y").alias("s")))
-    wf = Window.partitionBy("feature")
-    wc = (wf.orderBy("v")
-          .rowsBetween(Window.unboundedPreceding, Window.currentRow))
-    scan = hist.select(
-        "feature", "v",
-        F.sum("n").over(wc).cast("long").alias("nl"),
-        F.sum("s").over(wc).cast("long").alias("sl"),
-        F.sum("n").over(wf).cast("long").alias("nt"),
-        F.sum("s").over(wf).cast("long").alias("st"))
-    nl, sl = F.col("nl").cast("double"), F.col("sl").cast("double")
-    nr = (F.col("nt") - F.col("nl")).cast("double")
-    sr = (F.col("st") - F.col("sl")).cast("double")
-    score = sl * sl / nl + sr * sr / nr
-    cand = (scan.where(F.col("nl") < F.col("nt"))
-            .select("feature",
-                    F.struct(score.alias("sc"),
-                             (-F.col("v")).alias("nv"),
-                             F.col("nl").alias("nl"),
-                             F.col("sl").alias("sl"),
-                             F.col("nt").alias("nt"),
-                             F.col("st").alias("st")).alias("_b")))
-    best = cand.groupBy("feature").agg(F.max("_b").alias("b"))
-    base = (F.col("b.st").cast("double")
-            * F.col("b.st").cast("double")
-            / F.col("b.nt").cast("double"))
-    return best.select(
-        "feature",
-        (-F.col("b.nv")).alias("threshold"),
-        F.col("b.nl").alias("n_left"),
-        F.col("b.sl").alias("sum_left"),
-        (F.col("b.nt") - F.col("b.nl")).alias("n_right"),
-        (F.col("b.st") - F.col("b.sl")).alias("sum_right"),
-        _r6(F.col("b.sc") - base).alias("gain"))

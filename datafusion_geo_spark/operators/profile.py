@@ -251,41 +251,20 @@ def benford_audit(df: DataFrame, value_col: str) -> DataFrame:
     written as nine EXPLICIT terms in fixed digit order — a single
     fixed double expression of exact ints (the house contract), 6-dp
     rounded once. Non-positive / NULL values are excluded and
-    reported. ONE row out: (n, n_excluded, o1..o9, chi2).
+    reported. ONE row out: (n, n_excluded, o1..o9, chi2)."""
+    from .evals import _r6
 
-    Factored as row-cols / aggs / finalize (the wer_eval pattern) so
-    the streaming twin (streaming/drift.py streaming_benford) shares
-    every expression with batch — the 11 sums are commutative int64,
-    state = ONE row, monitorable unbounded with no watermark."""
-    return benford_finalize(
-        df.select(*benford_row_cols(value_col)).agg(*benford_aggs()))
-
-
-def benford_row_cols(value_col: str):
-    """Per-row projection shared by batch and streaming: the positive
-    value and its leading decimal digit (NULL when excluded)."""
     v = F.col(value_col).cast("long")
     pos = F.when(v > 0, v)
-    return [pos.alias("_pv"),
-            F.substring(pos.cast("string"), 1, 1).cast("int")
-            .alias("_d1")]
-
-
-def benford_aggs():
-    """The 11 commutative int64 sums — the entire (streaming) state."""
+    rows = df.select(pos.alias("_pv"),
+                     F.substring(pos.cast("string"), 1, 1).cast("int")
+                     .alias("_d1"))
     aggs = [F.count(F.lit(1)).cast("long").alias("n_rows"),
             F.sum(F.when(F.col("_pv").isNull(), 1).otherwise(0))
             .cast("long").alias("n_excluded")]
     aggs += [F.sum(F.when(F.col("_d1") == d, 1).otherwise(0))
              .cast("long").alias(f"o{d}") for d in range(1, 10)]
-    return aggs
-
-
-def benford_finalize(totals: DataFrame) -> DataFrame:
-    """The fixed-order nine-term chi-square tail over a totals row —
-    shared by batch and the streaming twin's bounded replay."""
-    from .evals import _r6
-
+    totals = rows.agg(*aggs)
     n = (F.col("n_rows") - F.col("n_excluded")).cast("long")
     chi = None
     for d in range(1, 10):
@@ -297,139 +276,3 @@ def benford_finalize(totals: DataFrame) -> DataFrame:
         n.alias("n"), "n_excluded",
         *[F.col(f"o{d}") for d in range(1, 10)],
         F.when(n > 0, _r6(chi)).alias("chi2"))
-
-
-def expectations_check(df: DataFrame, rules) -> DataFrame:
-    """Declarative data-contract audit — the Great-Expectations-style
-    gate a pipeline runs before promoting a table: each rule is
-    (name, predicate Column) where the predicate is TRUE for rows
-    SATISFYING the expectation (NULL counts as a violation — an
-    unknown is not a pass), and the report is one row per rule:
-    (rule, n_rows, n_violations, pass_rate 6-dp, passed boolean).
-
-    ONE partial+final aggregate whatever the rule count — every rule
-    is a conditional sum in the same corpus pass (the corr_matrix
-    shape), exploded to the per-rule report from the one-row result.
-    Row-count-free rules (uniqueness, referential integrity) need
-    their own grouped pass — compose with exact_dedup / join audits;
-    this operator is the per-ROW contract lane."""
-    from .text import _ratio6
-
-    names = [n for n, _ in rules]
-    if len(set(names)) != len(names):
-        raise ValueError("expectations_check: duplicate rule names")
-    aggs = [F.count(F.lit(1)).cast("long").alias("n_rows")]
-    for i, (_, pred) in enumerate(rules):
-        # coalesce: an EMPTY frame has zero violations, not NULL ones
-        aggs.append(F.coalesce(
-            F.sum(F.when(pred, 0).otherwise(1)),
-            F.lit(0)).cast("long").alias(f"v{i}"))
-    one = df.agg(*aggs)
-    rows = [F.struct(
-        F.lit(n).alias("rule"),
-        F.col("n_rows").alias("n_rows"),
-        F.col(f"v{i}").alias("n_violations"),
-        F.when(F.col("n_rows") > 0,
-               _ratio6(F.col("n_rows") - F.col(f"v{i}"),
-                       F.col("n_rows"))).alias("pass_rate"),
-        (F.col(f"v{i}") == 0).alias("passed"))
-        for i, n in enumerate(names)]
-    return (one.select(F.explode(F.array(*rows)).alias("_r"))
-            .select("_r.*"))
-
-
-def chi2_independence(df: DataFrame, col_a: str,
-                      col_b: str) -> DataFrame:
-    """Chi-square independence audit of two categorical columns —
-    "did this join / filter / rewrite entangle domain and label?",
-    the contingency screen run next to :func:`corr_matrix` for
-    non-numeric columns.
-
-    ONE grouped aggregate builds the occupied contingency cells;
-    the FULL R×C grid (chi-square needs the empty cells too — a
-    structural zero contributes its whole expectation) is the cross
-    of the two category-bounded marginal frames, left-joined back
-    onto the cells. Each cell's contribution
-    (O·N − R·C)² / (N·R·C) is a single fixed double expression of
-    exact int64 counts, micro-rounded PER CELL before any sum (the
-    benford_audit recipe), so the statistic is an exact int64 sum of
-    per-cell micros. Overflow envelope: O·N and R·C must fit int64 —
-    at larger corpora, pre-aggregate to category counts first (the
-    cell frame, not the row count, is what this operator scans
-    after its first aggregate). Rows with a NULL in either column
-    are excluded.
-
-    Plan note: two vouched broadcast crosses — the marginal-grid
-    cross (bounded by |A|·|B| categories) and the one-row grand
-    total (the hll_setops pattern).
-
-    Returns one row per grid cell: (val_a, val_b, observed, row_tot,
-    col_tot, expected, term_micro); ``expected`` is the house 6-dp
-    double of R·C/N, ``term_micro`` the cell's micro-int chi-square
-    contribution. Feed to :func:`chi2_independence_stat` for the
-    one-row statistic."""
-    from .evals import _r6
-
-    obs = (df.where(F.col(col_a).isNotNull()
-                    & F.col(col_b).isNotNull())
-           .select(F.col(col_a).cast("string").alias("val_a"),
-                   F.col(col_b).cast("string").alias("val_b")))
-    cells = (obs.groupBy("val_a", "val_b")
-             .agg(F.count(F.lit(1)).cast("long").alias("_o")))
-    # the cell frame feeds FOUR branches (row totals, column totals,
-    # grand total, and the grid's left-join probe); AQE reuses the
-    # exchange for the aggregates but re-scans the corpus for the
-    # broadcast probe — eagerly checkpointing the category-bounded
-    # cells (the pagerank_int lineage cut) pins the corpus to ONE
-    # scan regardless
-    cells = cells.localCheckpoint(eager=True)
-    rt = (cells.groupBy("val_a")
-          .agg(F.sum("_o").alias("row_tot")))
-    ct = (cells.groupBy("val_b")
-          .agg(F.sum("_o").alias("col_tot")))
-    tot = cells.agg(F.sum("_o").alias("_n"))
-    grid = rt.crossJoin(F.broadcast(ct))
-    j = (grid.join(cells, ["val_a", "val_b"], "left")
-         .crossJoin(F.broadcast(tot)))
-    o = F.coalesce(F.col("_o"), F.lit(0).cast("long"))
-    r, c, n = F.col("row_tot"), F.col("col_tot"), F.col("_n")
-    diff = (o * n - r * c).cast("double")
-    den = (n.cast("double") * r.cast("double") * c.cast("double"))
-    term = diff * diff / den
-    return j.select(
-        "val_a", "val_b", o.alias("observed"), "row_tot", "col_tot",
-        _r6(r.cast("double") * c.cast("double") / n.cast("double"))
-        .alias("expected"),
-        F.floor(term * F.lit(1e6) + F.lit(0.5)).cast("long")
-        .alias("term_micro"))
-
-
-def chi2_independence_stat(df: DataFrame, col_a: str,
-                           col_b: str) -> DataFrame:
-    """One-row tail over :func:`chi2_independence`'s cells: (n,
-    n_cells, dof, chi2, cramers_v) with dof = (|A|−1)·(|B|−1), chi2
-    the exact int64 sum of the per-cell micros divided once, and
-    Cramér's V = sqrt(chi2 / (n·min(|A|−1, |B|−1))) — the [0, 1]
-    effect size that makes chi-squares comparable across column
-    pairs — as one fixed double expression of the same ints, 6-dp
-    rounded. V is NULL for a degenerate (single-category) axis."""
-    from .evals import _r6
-
-    cells = chi2_independence(df, col_a, col_b)
-    agg = cells.agg(
-        F.sum("observed").cast("long").alias("n"),
-        F.count(F.lit(1)).cast("long").alias("n_cells"),
-        (F.count_distinct(F.col("val_a")) - 1).cast("long")
-        .alias("_ra"),
-        (F.count_distinct(F.col("val_b")) - 1).cast("long")
-        .alias("_cb"),
-        F.sum("term_micro").cast("long").alias("_chi2_micro"))
-    chi2 = (F.col("_chi2_micro") / F.lit(1_000_000.0) + F.lit(0.0))
-    mind = F.least(F.col("_ra"), F.col("_cb"))
-    v = F.sqrt(chi2 / (F.col("n").cast("double")
-                       * mind.cast("double")))
-    return agg.select(
-        "n", "n_cells",
-        (F.col("_ra") * F.col("_cb")).cast("long").alias("dof"),
-        chi2.alias("chi2"),
-        F.when(mind > 0, _r6(v)).alias("cramers_v"))

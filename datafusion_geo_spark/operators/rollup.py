@@ -17,12 +17,6 @@ per hour replaced via dynamic partition overwrite — was measured at
 work, the small-files failure mode of guide §6); the changelog writes
 ONE file per batch (rows bounded by the batch's key count, not the
 corpus) and the resolve is a key-cardinality-sized window.
-:func:`compact_rollup` (r12) is the merge-on-read half of the
-standard changelog + compaction pattern (what lakehouse MOR tables
-do): it rewrites the resolved table as one superseding batch and
-truncates every older ``_bid`` directory, bounding read amplification
-(without it the latest-per-hour window reads every batch ever
-applied). Run it every N applied batches.
 
 Contract (documented, asserted by tests): each applied batch must carry
 ALL events for every hour it contains — the standard re-aggregate-the-
@@ -36,13 +30,13 @@ auto-assigned id appends rows that resolve to the identical table.
 
 from __future__ import annotations
 
-import glob
-import os
 import re
 from typing import Optional
 
 import pyspark.sql.functions as F
 from pyspark.sql import Column, DataFrame, SparkSession, Window
+
+from .util import _fs_for
 
 
 def hour_col(ts_col: str = "ts") -> Column:
@@ -72,44 +66,15 @@ def hourly_rollup(events: DataFrame, ts_col: str = "ts",
                   .alias("sum_cents")))
 
 
-def _fs_for(spark: SparkSession, path: str):
-    """(Hadoop FileSystem, Path) for ``path`` — the same listing
-    abstraction Spark's own sinks use, so directory operations work on
-    any supported filesystem (local, HDFS, object-store connectors),
-    not just the local FS a driver-side ``glob`` can see."""
-    jvm = spark.sparkContext._jvm
-    hpath = jvm.org.apache.hadoop.fs.Path(path)
-    fs = hpath.getFileSystem(
-        spark.sparkContext._jsc.hadoopConfiguration())
-    return fs, hpath
-
-
-def _list_bid_ids(path: str, spark: Optional[SparkSession] = None) -> list:
-    """Batch ids with an existing ``_bid=N`` directory under ``path``
-    (one driver-side listing of the dataset root — no data read). With
-    a session the listing goes through the Hadoop FileSystem API
-    (object-store-safe); without one it falls back to a local glob."""
-    ids = []
-    if spark is not None:
-        fs, hpath = _fs_for(spark, path)
-        if not fs.exists(hpath):
-            return []
-        for st in fs.listStatus(hpath):
-            m = re.fullmatch(r"_bid=(\d+)", st.getPath().getName())
-            if m:
-                ids.append(int(m.group(1)))
-        return ids
-    for d in glob.glob(os.path.join(path, "_bid=*")):
-        m = re.fullmatch(r"_bid=(\d+)", os.path.basename(d))
-        if m:
-            ids.append(int(m.group(1)))
-    return ids
-
-
-def _next_batch_id(path: str,
-                   spark: Optional[SparkSession] = None) -> int:
-    """Smallest unused batch id: max existing ``_bid=N`` directory + 1."""
-    ids = _list_bid_ids(path, spark)
+def _next_batch_id(spark: SparkSession, path: str) -> int:
+    """Smallest unused batch id: max existing ``_bid=N`` directory + 1.
+    One driver-side listing of the dataset root (no data read) through
+    the Hadoop FileSystem API, so it is object-store-safe."""
+    fs, hpath = _fs_for(spark, path)
+    if not fs.exists(hpath):
+        return 0
+    ids = [int(m.group(1)) for st in fs.listStatus(hpath)
+           if (m := re.fullmatch(r"_bid=(\d+)", st.getPath().getName()))]
     return (max(ids) + 1) if ids else 0
 
 
@@ -130,7 +95,7 @@ def apply_rollup_batch(events_batch: DataFrame, path: str,
     twin's foreachBatch upsert)."""
     agg = hourly_rollup(events_batch, ts_col=ts_col)
     if batch_id is None:
-        batch_id = _next_batch_id(path, events_batch.sparkSession)
+        batch_id = _next_batch_id(events_batch.sparkSession, path)
     (agg.withColumn("_bid", F.lit(int(batch_id)).cast("long"))
      .coalesce(1)
      .write.mode("overwrite")
@@ -154,61 +119,3 @@ def read_rollup(spark: SparkSession, path: str) -> DataFrame:
             .select(F.col("hour").cast("long").alias("hour"),
                     "event_type", "n_events", "n_users", "sum_cents"))
 
-
-#: one changelog file holds at most this many rows before compaction
-#: stops coalescing to a single writer (the coalesce(1) in the apply
-#: path is safe because a BATCH is key-cardinality-bounded by contract;
-#: the COMPACTED table is every key ever written, which is not)
-MAX_SINGLE_FILE_ROWS = 5_000_000
-
-
-def compact_changelog(spark: SparkSession, path: str,
-                      resolved: DataFrame) -> None:
-    """Shared compaction step for the ``_bid``-changelog layout (this
-    module and the streaming twin): write ``resolved`` — the current
-    table, which by definition supersedes every prior batch for every
-    key/hour it resolves — as ONE new highest ``_bid`` directory, then
-    truncate all superseded directories.
-
-    Crash-safe and idempotent by ordering alone: the compacted batch
-    commits FIRST (from that moment every read resolves to it, so the
-    table never changes mid-compaction); deletions follow. A crash
-    between the two steps leaves extra superseded directories that the
-    resolve ignores, and a re-run compacts them away. All directory
-    operations go through the Hadoop FileSystem API (works on object
-    stores, not just local disk)."""
-    old_ids = _list_bid_ids(path, spark)
-    if len(old_ids) <= 1:
-        return  # zero or one batch: already compact
-    new_id = max(old_ids) + 1
-    # materialize BEFORE writing: the resolved frame reads the very
-    # path the compacted batch lands in, and Spark (correctly) refuses
-    # a write whose plan still scans its own output path. eager=True
-    # pins the materializing action here (ADVICE r11: never rely on
-    # the default).
-    resolved = resolved.localCheckpoint(eager=True)
-    out = resolved.withColumn("_bid", F.lit(int(new_id)).cast("long"))
-    # single-file output only while the table provably fits one writer;
-    # a wide-key deployment keeps Spark's own partitioning (several
-    # compacted files under one _bid dir read identically)
-    n_rows = resolved.limit(MAX_SINGLE_FILE_ROWS + 1).count()
-    if n_rows <= MAX_SINGLE_FILE_ROWS:
-        out = out.coalesce(1)
-    (out.write.mode("overwrite")
-     .option("partitionOverwriteMode", "dynamic")
-     .partitionBy("_bid")
-     .parquet(path))
-    fs, _ = _fs_for(spark, path)
-    jvm_path = spark.sparkContext._jvm.org.apache.hadoop.fs.Path
-    for bid in old_ids:
-        fs.delete(jvm_path(os.path.join(path, f"_bid={bid}")), True)
-
-
-def compact_rollup(spark: SparkSession, path: str) -> None:
-    """Compact the batch rollup changelog at ``path``: rewrite the
-    resolved table (read_rollup — latest batch per hour) as one
-    superseding batch and delete every older ``_bid`` directory. The
-    read side is identical before and after (the compacted batch
-    carries ALL hours, so latest-per-hour resolves to it everywhere);
-    file count drops to the compacted batch's own files."""
-    compact_changelog(spark, path, read_rollup(spark, path))

@@ -37,10 +37,6 @@ def norm(v: Column) -> Column:
                               F.lit(0.0), lambda acc, x: acc + x))
 
 
-def cosine(a: Column, b: Column) -> Column:
-    return dot(a, b) / (norm(a) * norm(b))
-
-
 def cos6(num: Column, den: Column) -> Column:
     """6-dp cosine ``num/den`` with the zero-denominator case pinned to
     -2.0 — strictly below any true cosine, so a zero-norm vector LOSES
@@ -82,8 +78,9 @@ def cosine_topk(emb: DataFrame, queries: DataFrame, k: int = 10,
     """Exact cosine top-k: broadcast the query set, evaluate cosine
     JVM-side, rank with a window partitioned by query id (ties broken by
     neighbor id). Self-matches excluded. Norms are materialized once per
-    side before the pairing — cosine() inline would re-aggregate the
-    corpus vector's norm for every one of the Q queries it meets.
+    side before the pairing — an inline dot/norm cosine would
+    re-aggregate the corpus vector's norm for every one of the Q
+    queries it meets.
     With ``prenormed=True`` both inputs already follow the
     :func:`prenorm` contract (id_col, v, n) — e.g. a persisted corpus —
     and the cast/norm stages are skipped entirely."""
@@ -624,27 +621,6 @@ def semantic_dedup(emb: DataFrame, n_centroids: int = 8,
                     (F.col("max_sim_lower").isNull()
                      | (F.col("max_sim_lower") < min_cosine))
                     .alias("is_kept")))
-
-
-def ann_hyperplane_topk(emb: DataFrame, queries: DataFrame, planes: list,
-                        k: int = 10, id_col: str = "vec_id",
-                        vec_col: str = "embedding") -> DataFrame:
-    """Approximate top-k: candidates restricted to the query's hyperplane
-    bucket (equi-join on the bucket int — a plain shuffle join), then
-    exact cosine rank within bucket."""
-    c = emb.select(F.col(id_col).alias("neighbor_id"),
-                   as_double(F.col(vec_col)).alias("cv"))
-    c = c.withColumn("bucket", hyperplane_bucket(F.col("cv"), planes))
-    q = queries.select(F.col(id_col).alias("query_id"),
-                       as_double(F.col(vec_col)).alias("qv"))
-    q = F.broadcast(q.withColumn("bucket", hyperplane_bucket(F.col("qv"), planes)))
-    scored = (c.join(q, "bucket")
-              .where(F.col("neighbor_id") != F.col("query_id"))
-              .select("query_id", "neighbor_id",
-                      round6_binary(cosine(F.col("qv"), F.col("cv"))).alias("sim")))
-    w = Window.partitionBy("query_id").orderBy(F.desc("sim"), F.asc("neighbor_id"))
-    return (scored.withColumn("rank", F.row_number().over(w))
-            .where(F.col("rank") <= k))
 
 
 def embedding_near_dup(emb: DataFrame, probe_max_id: int,

@@ -8,9 +8,7 @@ public interchange formats and reads them back:
   ``piece<TAB>score`` line per piece, score printed with 6 fixed
   decimals (the library's std::to_string rendering). For the unigram
   model the score IS the fitted log-probability (score_micro / 1e6 —
-  micro precision survives the text round-trip exactly). For BPE,
-  SentencePiece's convention: merged pieces score -(rank+1); alphabet
-  (single-char) pieces score 0.
+  micro precision survives the text round-trip exactly).
 * ``merges.txt`` — the BPE merge list, one ``left right`` pair per
   line in rank order (the GPT-2 / HuggingFace interchange format;
   SentencePiece's .vocab alone cannot reconstruct merge ORDER, so the
@@ -42,17 +40,6 @@ def sp_vocab_unigram(
     ln-probability), rows in the fit's own (cnt desc, piece asc)
     order — deterministic for a deterministic fit."""
     return [(p, sm / 1e6) for p, _cnt, sm in fitted]
-
-
-def sp_vocab_bpe(merges: Sequence[Tuple[str, str, str]],
-                 alphabet: Sequence[str] = ()) -> List[Tuple[str, float]]:
-    """(piece, score) rows for a BPE merge list [(left, right, merged)]:
-    alphabet chars first (score 0.0, sorted), then each merged piece at
-    rank r with score -(r+1) — SentencePiece's BPE score convention
-    (rank order encoded in the score)."""
-    rows = [(c, 0.0) for c in sorted(set(alphabet))]
-    rows += [(m, -float(r + 1)) for r, (_l, _r, m) in enumerate(merges)]
-    return rows
 
 
 def write_sp_vocab(rows: Sequence[Tuple[str, float]], path: str) -> str:

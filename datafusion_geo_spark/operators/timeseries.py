@@ -78,224 +78,3 @@ def resample_locf(events: DataFrame, step_minutes: int = 60,
         .alias(value_col),
         F.col("n_obs").isNull().alias("filled"))
 
-
-def trend_by_key(df: DataFrame, key_col: str, x_col: str,
-                 y_col: str) -> DataFrame:
-    """Per-key OLS trend of an integer-quantized series — the
-    monitoring question ("is this metric drifting, per user /
-    tenant / domain?") asked directly of event logs or of
-    :func:`resample_locf` output. One grouped partial+final aggregate
-    of the five exact int64 moments per key (n, Sx, Sy, Sxy, Sxx) is
-    the only corpus pass; the slope is the closed form
-    (n·Sxy − Sx·Sy) / (n·Sxx − Sx²) with EXACT integer numerator and
-    denominator carried in the output (slope_num/slope_den) plus the
-    house 6-dp double. Same overflow envelope as pearson_corr:
-    n·Sxy must fit int64 — quantize x (e.g. slot index, epoch hours)
-    and y (cents) accordingly.
-
-    Returns one row per key: (key, n, slope_num, slope_den, slope);
-    slope NULL for a single-point or zero-x-variance key."""
-    from .evals import _r6
-
-    x = F.col(x_col).cast("long")
-    y = F.col(y_col).cast("long")
-    g = (df.groupBy(F.col(key_col))
-         .agg(F.count(F.lit(1)).cast("long").alias("n"),
-              F.sum(x).alias("sx"), F.sum(y).alias("sy"),
-              F.sum(x * y).alias("sxy"), F.sum(x * x).alias("sxx")))
-    num = (F.col("n") * F.col("sxy") - F.col("sx") * F.col("sy"))
-    den = (F.col("n") * F.col("sxx") - F.col("sx") * F.col("sx"))
-    return g.select(
-        F.col(key_col), "n",
-        num.cast("long").alias("slope_num"),
-        den.cast("long").alias("slope_den"),
-        F.when(den > 0, _r6(num.cast("double") / den.cast("double")))
-        .alias("slope"))
-
-
-def cusum_changepoint(df: DataFrame, key_col: str, x_col: str,
-                      y_col: str) -> DataFrame:
-    """Per-key CUSUM changepoint detection over an integer-quantized
-    series — "where did this metric's level shift, per tenant /
-    domain / sensor?". The mean-centred cumulative sum
-    S_k − k·(T/n) peaks at a level shift; its integer-exact form
-    d_k = |n·S_k − k·T| needs no division, so the whole scan is
-    int64 window arithmetic.
-
-    Shape / 100-TB adjudication:
-    - observations are pre-aggregated per (key, x) — sum of y — so
-      the order along x is total and deterministic;
-    - ONE running window per key (cumulative sum + row number),
-      partitioned by the key hash — no global single-task window;
-    - the peak is a plain grouped max over a struct with a
-      deterministic tie order (largest d, then SMALLEST x), a
-      partial+final aggregate.
-
-    Overflow envelope (trend_by_key's contract): n·S_k must fit
-    int64 — quantize y (cents) so per-key |sum| · n_slots < 2^63.
-
-    Rows with a NULL x or y are excluded. Returns one row per key
-    with ≥ 2 distinct x: (key, n_slots,
-    total_y, cp_x, cusum_num, cusum_den, cusum) where cusum_num =
-    max_{1≤k<n} |n·S_k − k·T|, cusum_den = n, and cusum is the house
-    6-dp double of their ratio (= max |S_k − k·mean|); cp_x is the
-    last x of the left segment at the peak."""
-    from .evals import _sratio6
-
-    per_x = (df.where(F.col(x_col).isNotNull()
-                      & F.col(y_col).isNotNull())
-             .groupBy(F.col(key_col).alias("key"),
-                      F.col(x_col).cast("long").alias("x"))
-             .agg(F.sum(F.col(y_col).cast("long")).alias("sy")))
-    wk = Window.partitionBy("key")
-    w = (wk.orderBy("x")
-         .rowsBetween(Window.unboundedPreceding, Window.currentRow))
-    scan = per_x.select(
-        "key", "x", "sy",
-        F.sum("sy").over(w).alias("s_k"),
-        F.row_number().over(wk.orderBy("x")).alias("k"),
-        F.sum("sy").over(wk).alias("t"),
-        F.count(F.lit(1)).over(wk).alias("n"))
-    d = (F.abs(F.col("n") * F.col("s_k") - F.col("k") * F.col("t"))
-         .cast("long"))
-    cand = (scan.where(F.col("k") < F.col("n"))
-            .select("key", "n", "t",
-                    F.struct(d.alias("d"), (-F.col("x")).alias("nx"))
-                    .alias("_pk")))
-    best = (cand.groupBy("key")
-            .agg(F.max("_pk").alias("_b"), F.first("n").alias("n"),
-                 F.first("t").alias("t")))
-    return best.select(
-        F.col("key").alias(key_col),
-        F.col("n").alias("n_slots"),
-        F.col("t").alias("total_y"),
-        (-F.col("_b.nx")).alias("cp_x"),
-        F.col("_b.d").alias("cusum_num"),
-        F.col("n").alias("cusum_den"),
-        _sratio6(F.col("_b.d"), F.col("n")).alias("cusum"))
-
-
-def seasonal_profile(df: DataFrame, ts_col: str, value_col: str,
-                     period: int, step_minutes: int = 60) -> DataFrame:
-    """Seasonal decomposition profile of an integer-quantized metric:
-    the per-slot-in-period mean and its deviation from the overall
-    mean (the seasonal index) — "what does a normal hour-of-day /
-    day-of-week look like?", the baseline every anomaly monitor
-    subtracts first.
-
-    Slot assignment is resample_locf's exact integer form
-    (``unix_micros div step``, then ``% period``); the profile is ONE
-    grouped aggregate over ≤ ``period`` cells crossed with a one-row
-    totals frame (a vouched broadcast cross, the hll_setops pattern).
-    Both means are the house signed 6-dp micro ratio, and the
-    seasonal index is their EXACT micro-int difference
-    (micro(sum_pos/n_pos) − micro(S/N)) / 1e6 — a difference of two
-    already-rounded quantities, so the only overflow requirement is
-    2e6·|sum| fitting int64 (|Σ cents| < 4.6e12 — NOT the
-    sum_pos·N cross product, whose envelope dies at corpus scale).
-
-    Returns one row per occupied slot position: (pos, n, sum_y,
-    mean, seasonal_idx). NULL timestamps / values are excluded.
-
-    Factored as row-cols / aggs / finalize (the benford_audit
-    pattern) so the streaming twin (streaming/drift.py
-    streaming_seasonal) shares every expression with batch: the
-    per-pos (n, Σy) cells ARE the streaming state — bounded by
-    ``period``, not the stream — and the grand totals are derived
-    from the cells, so the corpus is scanned exactly once."""
-    if period <= 0 or step_minutes <= 0:
-        raise ValueError(
-            "seasonal_profile: period and step_minutes must be > 0")
-    obs = (df.where(F.col(ts_col).isNotNull()
-                    & F.col(value_col).isNotNull())
-           .select(*seasonal_row_cols(ts_col, value_col, period,
-                                      step_minutes)))
-    return seasonal_finalize(
-        obs.groupBy("pos").agg(*seasonal_aggs()))
-
-
-def seasonal_row_cols(ts_col: str, value_col: str, period: int,
-                      step_minutes: int = 60):
-    """Per-row projection shared by batch and streaming: the slot
-    position on the period axis and the long value."""
-    step = step_minutes * MICROS_PER_MINUTE
-    return [F.expr(f"(unix_micros({ts_col}) div {step}) "
-                   f"% {period}").alias("pos"),
-            F.col(value_col).cast("long").alias("_y")]
-
-
-def seasonal_aggs():
-    """The two commutative int64 sums per cell — the entire
-    (streaming) state, ≤ ``period`` rows."""
-    return [F.count(F.lit(1)).cast("long").alias("n"),
-            F.sum("_y").alias("sum_y")]
-
-
-def seasonal_finalize(cells: DataFrame) -> DataFrame:
-    """The micro-mean tail over a (pos, n, sum_y) cells frame —
-    shared by batch and the streaming twin's bounded replay. Grand
-    totals come from the cells themselves (one tiny aggregate +
-    a vouched one-row broadcast cross)."""
-    from .evals import _idiv
-
-    def smicro(num, den):
-        return (F.signum(num).cast("long")
-                * _idiv(F.lit(2_000_000) * F.abs(num) + den,
-                        F.lit(2) * den)).cast("long")
-
-    tot = cells.agg(F.sum("n").cast("long").alias("_nn"),
-                    F.sum("sum_y").cast("long").alias("_ss"))
-    j = cells.crossJoin(F.broadcast(tot))
-    m_pos = smicro(F.col("sum_y"), F.col("n"))
-    m_all = smicro(F.col("_ss"), F.col("_nn"))
-    return j.select(
-        "pos", "n", "sum_y",
-        (m_pos / F.lit(1_000_000.0) + F.lit(0.0)).alias("mean"),
-        ((m_pos - m_all) / F.lit(1_000_000.0) + F.lit(0.0))
-        .alias("seasonal_idx"))
-
-
-def ohlc_bars(events: DataFrame, step_minutes: int = 60,
-              key_col: str = "user_id", ts_col: str = "ts",
-              value_col: str = "value",
-              id_col: str = "event_id") -> DataFrame:
-    """OHLC bars: per key and fixed-width window, the opening /
-    highest / lowest / closing observation — the standard
-    downsampling of a metric stream for dashboards and models
-    (candlesticks for sensors).
-
-    ONE grouped aggregate per (key, slot): open and close are
-    min/max over a (timestamp, id, value) struct — resample_locf's
-    total deterministic tie order, a plain partial+final aggregate
-    with no window anywhere; high/low/count/sum are plain extrema
-    and int64 sums of the integer-quantized value. Slot assignment
-    is the exact ``unix_micros div step`` form.
-
-    Returns (key, slot_ts, open, high, low, close, n_obs, sum_y);
-    rows with NULL timestamp or value are excluded."""
-    if step_minutes <= 0:
-        raise ValueError("ohlc_bars: step_minutes must be > 0")
-    step = step_minutes * MICROS_PER_MINUTE
-    us = F.unix_micros(F.col(ts_col))
-    y = F.col(value_col).cast("long")
-    obs = (events.where(F.col(ts_col).isNotNull() & y.isNotNull())
-           .select(F.col(key_col).alias("key"),
-                   F.expr(f"unix_micros({ts_col}) div {step}")
-                   .alias("slot"),
-                   y.alias("y"),
-                   F.struct(us.alias("us"),
-                            F.col(id_col).alias("id"),
-                            y.alias("v")).alias("_o")))
-    g = (obs.groupBy("key", "slot")
-         .agg(F.min("_o").alias("_first"),
-              F.max("_o").alias("_last"),
-              F.max("y").alias("high"),
-              F.min("y").alias("low"),
-              F.count(F.lit(1)).cast("long").alias("n_obs"),
-              F.sum("y").alias("sum_y")))
-    return g.select(
-        F.col("key").alias(key_col),
-        F.timestamp_micros(F.col("slot") * F.lit(step))
-        .alias("slot_ts"),
-        F.col("_first.v").alias("open"), "high", "low",
-        F.col("_last.v").alias("close"), "n_obs", "sum_y")

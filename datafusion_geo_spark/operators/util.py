@@ -3,7 +3,7 @@
 from __future__ import annotations
 
 import pyspark.sql.functions as F
-from pyspark.sql import Column
+from pyspark.sql import Column, SparkSession
 
 #: DuckDB-twin of :func:`round6_binary` — oracles embed this exact text so
 #: both engines run the identical IEEE op sequence on the binary double.
@@ -71,3 +71,15 @@ def fresh_name(base: str, taken) -> str:
     while name in taken:
         name = "_" + name
     return name
+
+
+def _fs_for(spark: SparkSession, path: str):
+    """(Hadoop FileSystem, Path) for ``path`` — the same listing
+    abstraction Spark's own sinks use, so directory operations work on
+    any supported filesystem (local, HDFS, object-store connectors),
+    not just the local FS a driver-side ``glob`` can see."""
+    jvm = spark.sparkContext._jvm
+    hpath = jvm.org.apache.hadoop.fs.Path(path)
+    fs = hpath.getFileSystem(
+        spark.sparkContext._jsc.hadoopConfiguration())
+    return fs, hpath

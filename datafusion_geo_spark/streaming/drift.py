@@ -203,55 +203,3 @@ def streaming_unigram_fertility(spark: SparkSession,
         run_bounded_complete(totals, "stream_ufert_",
                              source_paths=(f"{sf_dir}/documents.parquet",)))
 
-
-def streaming_benford(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Streaming Benford first-digit monitor: the forensic numeric-
-    quality screen (operators/profile.py benford_audit) maintained
-    over the events stream's value-in-cents — the ingest-side alarm
-    for a broken unit conversion or a fabricated feed. State = the
-    ONE row of 11 commutative int64 sums (no watermark, the
-    streaming_wer story); the per-row digit projection
-    (benford_row_cols) and the fixed-order chi-square tail
-    (benford_finalize) are SHARED with batch, so the bounded
-    availableNow replay equals the batch audit of the same frame."""
-    from ..operators.profile import (benford_aggs, benford_finalize,
-                                     benford_row_cols)
-    from ..sources.fixtures import load_events_stream
-    from .runner import run_bounded_complete
-    ev = load_events_stream(spark, sf_dir).where(
-        F.col("value").isNotNull())
-    cents = ev.select(
-        F.floor(F.col("value") * F.lit(100.0) + F.lit(0.5))
-        .cast("long").alias("cents"))
-    per = cents.select(*benford_row_cols("cents"))
-    totals = per.groupBy().agg(*benford_aggs())
-    return benford_finalize(
-        run_bounded_complete(totals, "stream_benford_",
-                             source_paths=(f"{sf_dir}/events.parquet",)))
-
-
-def streaming_seasonal(spark: SparkSession, sf_dir: str,
-                       period: int = 24) -> DataFrame:
-    """Streaming seasonal-baseline monitor: the hour-of-day profile
-    (operators/timeseries.py seasonal_profile) maintained over the
-    events stream's value-in-cents — the live "what does a normal
-    hour look like" table an anomaly alert subtracts from. State =
-    the ≤ ``period`` (pos, n, Σy) cells (bounded by the period
-    grid, NOT the stream — no watermark needed, the streaming_ks
-    state story); the row projection (seasonal_row_cols) and the
-    micro-mean tail (seasonal_finalize) are SHARED with batch, so
-    the bounded availableNow replay equals the batch profile of the
-    same frame."""
-    from ..operators.timeseries import (seasonal_aggs,
-                                        seasonal_finalize,
-                                        seasonal_row_cols)
-    ev = (load_events_stream(spark, sf_dir)
-          .where(F.col("value").isNotNull() & F.col("ts").isNotNull()))
-    cents = ev.select(
-        "ts", F.floor(F.col("value") * F.lit(100.0) + F.lit(0.5))
-        .cast("long").alias("cents"))
-    rows = cents.select(*seasonal_row_cols("ts", "cents", period))
-    cells = rows.groupBy("pos").agg(*seasonal_aggs())
-    return seasonal_finalize(
-        run_bounded_complete(cells, "stream_seasonal_",
-                             source_paths=(f"{sf_dir}/events.parquet",)))

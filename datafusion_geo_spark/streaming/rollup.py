@@ -24,13 +24,8 @@ partition directories (~9,300 filesystem objects) per run and cost
 trigger and dominated by sequential per-directory commit/rename work
 on the driver. The changelog writes ONE file per micro-batch (rows
 per batch are bounded by the updated-key count, not the corpus), and
-the latest-per-key resolve is a key-cardinality-sized aggregate —
-the merge-on-read half of the standard changelog + compaction
-pattern (what lakehouse MOR tables do). :func:`compact_stream_rollup`
-(r12) is the other half: rewrite the resolved table as one
-superseding batch and truncate older ``_bid`` directories, bounding
-read amplification over a long-running stream (run it every N
-micro-batches, e.g. from a listener).
+the latest-per-key resolve is a key-cardinality-sized aggregate
+(merge-on-read, what lakehouse MOR tables do).
 
 Stats are the MERGEABLE subset (counts, exact cent-sums, min/max):
 exact distinct-user counts are not mergeable from aggregated state — a
@@ -127,14 +122,3 @@ def read_stream_rollup(spark: SparkSession, path: str) -> DataFrame:
             .select("hour", "event_type", "_s.n_events", "_s.sum_cents",
                     "_s.min_value", "_s.max_value"))
 
-
-def compact_stream_rollup(spark: SparkSession, path: str) -> None:
-    """Compact the streaming rollup changelog at ``path``: rewrite the
-    resolved table (read_stream_rollup — latest write per key) as one
-    superseding ``_bid`` batch and delete every older directory. Read
-    side identical before and after (the compacted batch carries every
-    key, so per-key max_by resolves to it); crash-safety and
-    idempotency are the shared compactor's (write-then-truncate
-    ordering, operators/rollup.compact_changelog)."""
-    from ..operators.rollup import compact_changelog
-    compact_changelog(spark, path, read_stream_rollup(spark, path))

@@ -1,13 +1,11 @@
-"""Hex binning: assignment correctness (nearest-center property),
-total-count conservation, and the hexagon WKT generator."""
+"""Hex binning: assignment correctness (nearest-center property) and
+total-count conservation."""
 
 import math
 
 import pyspark.sql.functions as F
-import pytest
 
 from datafusion_geo_spark.operators.hexbin import (SQRT3, hex_cell,
-                                                   hexagon_wkt,
                                                    hexbin_counts)
 
 
@@ -52,17 +50,6 @@ def test_null_coords_dropped(spark):
     df = spark.createDataFrame(
         [(1, 0.0, 0.0), (2, None, None)], "id int, x double, y double")
     assert sum(r["n"] for r in hexbin_counts(df, 1.0).collect()) == 1
-
-
-def test_hexagon_wkt_shape():
-    w = hexagon_wkt(0, 0, 1.0)
-    assert w.startswith("POLYGON((") and w.count(",") == 6
-    # vertices of cell (0,0) at distance 1 from the origin
-    body = w[len("POLYGON(("):-2]
-    pts = [tuple(map(float, p.split())) for p in body.split(",")]
-    assert pts[0] == pts[-1]
-    for (px, py) in pts[:-1]:
-        assert math.hypot(px, py) == pytest.approx(1.0, abs=1e-6)
 
 
 def test_origin_point_in_origin_cell(spark):

@@ -1,8 +1,8 @@
-"""Z-order layout: Morton keys + file-clustering write arrangement."""
+"""Z-order layout: Morton keys against a reference bit interleave."""
 
 import pyspark.sql.functions as F
 
-from datafusion_geo_spark.operators.layout import morton_key, zorder_layout
+from datafusion_geo_spark.operators.layout import morton_key
 
 
 def _ref_morton(x, y, bounds, bits=16):
@@ -36,29 +36,3 @@ def test_morton_matches_reference_interleave(spark):
         else:
             assert got[i] == _ref_morton(min(max(x, -180.0), 180.0),
                                          min(max(y, -90.0), 90.0), b), i
-
-
-def test_zorder_locality(spark):
-    # after layout, consecutive rows are spatial neighbors: the mean
-    # jump between successive rows must beat a shuffled order by a lot
-    import math
-    rows = [(i, float((i * 7919) % 500), float((i * 104729) % 500))
-            for i in range(2000)]
-    df = spark.createDataFrame(rows, "id long, x double, y double")
-    b = (0.0, 0.0, 500.0, 500.0)
-    laid = zorder_layout(df, "x", "y", b, num_files=4).collect()
-    assert sorted(r["id"] for r in laid) == list(range(2000))
-
-    def mean_jump(seq):
-        return sum(math.hypot(a["x"] - c["x"], a["y"] - c["y"])
-                   for a, c in zip(seq, seq[1:])) / (len(seq) - 1)
-
-    assert mean_jump(laid) < mean_jump(sorted(laid, key=lambda r: r["id"])) / 4
-
-
-def test_zorder_plan_is_range_partitioning(spark):
-    df = spark.createDataFrame([(1, 0.0, 0.0)], "id int, x double, y double")
-    out = zorder_layout(df, "x", "y", (0.0, 0.0, 1.0, 1.0), num_files=2)
-    plan = out._jdf.queryExecution().toString()
-    assert "rangepartitioning" in plan.lower()
-    assert "_zkey" not in out.columns

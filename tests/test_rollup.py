@@ -131,42 +131,3 @@ def test_supersede_drops_keys_absent_from_newest_slice(spark):
     got = read_rollup(spark, path).where(
         (F.col("hour") == target) & (F.col("event_type") == dropped))
     assert got.count() == 0
-
-
-def test_compaction_preserves_table_and_truncates_log(spark):
-    """compact_rollup: read side byte-identical before/after, file
-    count bounded (one compacted batch), idempotent re-run, and a
-    simulated crash (superseded dir survives the truncate) still
-    resolves to the identical table."""
-    from datafusion_geo_spark.operators.rollup import (apply_rollup_batch,
-                                                       compact_rollup,
-                                                       read_rollup)
-    ev = _events(spark)
-    path = os.path.join(CACHE, "ds5")
-    even = ev.where(_hour() % 2 == 0)
-    odd = ev.where(_hour() % 2 == 1)
-    apply_rollup_batch(even, path)
-    apply_rollup_batch(odd, path)
-    # late re-apply of one hour so the log carries a superseded slice
-    hours = [r["hour"] for r in read_rollup(spark, path)
-             .select("hour").distinct().collect() if r["hour"] is not None]
-    apply_rollup_batch(ev.where(_hour() == min(hours)), path)
-    before = _rows(read_rollup(spark, path))
-    assert len(glob.glob(os.path.join(path, "_bid=*"))) == 3
-    compact_rollup(spark, path)
-    assert _rows(read_rollup(spark, path)) == before
-    dirs = glob.glob(os.path.join(path, "_bid=*"))
-    assert len(dirs) == 1                      # log truncated
-    assert len(_data_files(path)) == 1         # single compacted file
-    compact_rollup(spark, path)                # idempotent no-op
-    assert _rows(read_rollup(spark, path)) == before
-    assert glob.glob(os.path.join(path, "_bid=*")) == dirs
-    # crash simulation: a superseded dir that escaped the truncate is
-    # ignored by the resolve (the compacted batch wins every hour) and
-    # a re-run compacts it away
-    stale = os.path.join(path, "_bid=0")
-    shutil.copytree(dirs[0], stale)
-    assert _rows(read_rollup(spark, path)) == before
-    compact_rollup(spark, path)
-    assert _rows(read_rollup(spark, path)) == before
-    assert len(glob.glob(os.path.join(path, "_bid=*"))) == 1

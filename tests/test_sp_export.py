@@ -11,7 +11,7 @@ import pytest
 import pyspark.sql.functions as F
 
 from datafusion_geo_spark.operators.sp_export import (
-    read_bpe_merges, read_sp_vocab, sp_vocab_bpe, sp_vocab_unigram,
+    read_bpe_merges, read_sp_vocab, sp_vocab_unigram,
     unigram_fitted_from_vocab, write_bpe_merges, write_sp_vocab)
 
 
@@ -42,13 +42,6 @@ def test_vocab_rejects_whitespace_pieces(tmp_path):
         write_sp_vocab([("", 0.0)], p)
     with pytest.raises(ValueError, match="whitespace"):
         write_bpe_merges([("a", "b\tc", "ab\tc")], p)
-
-
-def test_bpe_vocab_convention():
-    rows = sp_vocab_bpe([("a", "b", "ab"), ("ab", "c", "abc")],
-                        alphabet=["c", "a", "b"])
-    assert rows == [("a", 0.0), ("b", 0.0), ("c", 0.0),
-                    ("ab", -1.0), ("abc", -2.0)]
 
 
 def test_merges_roundtrip(tmp_path):

@@ -60,42 +60,6 @@ def test_streaming_rollup_update_replaces_only_its_key(spark, tmp_path):
     assert len(glob.glob(f"{p}/_bid=1/*.parquet")) == 1
 
 
-def test_streaming_rollup_compaction_identical_and_bounded(spark,
-                                                           tmp_path):
-    """compact_stream_rollup: resolved table identical before/after,
-    superseded _bid dirs truncated, re-run a no-op (key-granular twin
-    of the batch compaction test)."""
-    import glob
-    from datafusion_geo_spark.streaming.rollup import (
-        compact_stream_rollup, read_stream_rollup)
-    p = str(tmp_path / "roll4")
-    cols = "hour long, event_type string, n_events long, sum_cents long, " \
-           "min_value double, max_value double"
-
-    def upsert(rows, bid):
-        (spark.createDataFrame(rows, cols)
-         .withColumn("_bid", F.lit(bid).cast("long"))
-         .coalesce(1)
-         .write.mode("overwrite")
-         .option("partitionOverwriteMode", "dynamic")
-         .partitionBy("_bid").parquet(p))
-
-    upsert([(1, "click", 5, 500, 1.0, 9.0),
-            (1, "view", 2, 200, 2.0, 3.0)], 0)
-    upsert([(1, "click", 8, 800, 0.5, 9.0),
-            (2, "view", 1, 100, 4.0, 4.0)], 1)
-    before = sorted(map(tuple, read_stream_rollup(spark, p).collect()))
-    compact_stream_rollup(spark, p)
-    assert sorted(map(tuple, read_stream_rollup(spark, p).collect())) \
-        == before
-    dirs = glob.glob(f"{p}/_bid=*")
-    assert len(dirs) == 1
-    compact_stream_rollup(spark, p)            # idempotent no-op
-    assert glob.glob(f"{p}/_bid=*") == dirs
-    assert sorted(map(tuple, read_stream_rollup(spark, p).collect())) \
-        == before
-
-
 def test_streaming_rollup_drops_null_ts(spark, tmp_path):
     """Event-time windows drop NULL-timestamp rows; no NULL hour
     partition appears (unlike the batch rollup, which carries one)."""

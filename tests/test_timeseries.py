@@ -122,70 +122,3 @@ def test_resample_locf_fuzz(spark):
         assert got == want
 
     run()
-
-
-def test_ohlc_bars_basic(spark):
-    from datafusion_geo_spark.operators.timeseries import ohlc_bars
-    rows = [
-        (1, _t(0, 10), 7, 30.0),   # slot 0 open
-        (2, _t(0, 40), 7, 50.0),   # slot 0 high
-        (3, _t(0, 50), 7, 20.0),   # slot 0 low + close
-        (4, _t(2), 7, 40.0),       # slot 2 single obs
-        (5, _t(0), 9, 99.0),       # other key
-        (6, None, 7, 1.0),         # NULL ts excluded
-        (7, _t(1), 7, None),       # NULL value excluded
-    ]
-    out = {(r.user_id, r.slot_ts.minute):
-           (r.open, r.high, r.low, r.close, r.n_obs, r.sum_y)
-           for r in ohlc_bars(_ev(spark, rows), step_minutes=1)
-           .collect()}
-    assert out == {
-        (7, 0): (30, 50, 20, 20, 3, 100),
-        (7, 2): (40, 40, 40, 40, 1, 40),
-        (9, 0): (99, 99, 99, 99, 1, 99),
-    }
-
-
-def test_ohlc_tie_breaks_by_id(spark):
-    from datafusion_geo_spark.operators.timeseries import ohlc_bars
-    rows = [(9, _t(0, 30), 1, 5.0), (2, _t(0, 30), 1, 8.0)]
-    r = ohlc_bars(_ev(spark, rows), step_minutes=1).collect()[0]
-    # same timestamp: lower id opens, higher id closes
-    assert (r.open, r.close) == (8, 5)
-    import pytest
-    with pytest.raises(ValueError, match="ohlc_bars"):
-        ohlc_bars(_ev(spark, rows), step_minutes=0)
-
-
-def test_ohlc_fuzz(spark):
-    from hypothesis import given, settings
-    from hypothesis import strategies as st
-
-    from datafusion_geo_spark.operators.timeseries import ohlc_bars
-
-    row = st.tuples(st.integers(1, 60), st.integers(0, 200),
-                    st.integers(0, 2), st.integers(-50, 50))
-
-    @settings(max_examples=8, deadline=None)
-    @given(st.lists(row, min_size=1, max_size=40, unique_by=lambda r: r[0]))
-    def run(rows):
-        ev = [(eid, _t(sec // 60, sec % 60), k, float(v))
-              for eid, sec, k, v in rows]
-        got = {(r.user_id, r.slot_ts.minute):
-               (r.open, r.high, r.low, r.close, r.n_obs, r.sum_y)
-               for r in ohlc_bars(_ev(spark, ev), step_minutes=1)
-               .collect()}
-        ref = {}
-        for eid, sec, k, v in rows:
-            slot = sec // 60
-            cell = ref.setdefault((k, slot), [])
-            cell.append((sec, eid, v))
-        want = {}
-        for (k, slot), obs in ref.items():
-            obs.sort()
-            vals = [v for _, _, v in obs]
-            want[(k, slot)] = (obs[0][2], max(vals), min(vals),
-                               obs[-1][2], len(obs), sum(vals))
-        assert got == want
-
-    run()

@@ -20,22 +20,13 @@ sys.path.insert(0, HERE)
 SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
 
 
-def steal_ticks():
-    try:
-        with open("/proc/stat") as f:
-            parts = f.readline().split()
-        return int(parts[8]) if parts[0] == "cpu" and len(parts) > 8 else 0
-    except Exception:
-        return 0
-
-
 def main():
     args = sys.argv[1:]
     tries = 3
     if args and args[0] == "--tries":
         tries = int(args[1])
         args = args[2:]
-    from tools.sweep import build_spark
+    from tools.sweep import build_spark, steal_ticks
     import __spark_entry__ as entrymod
     spark = build_spark()
     spark.sparkContext.setLogLevel("ERROR")
